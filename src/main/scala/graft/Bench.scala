@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every registered query at the SF directory
   * given by SPARK_GRAFT_SF_DIR and prints one JSON line. A warm-up action
   * first touches the fixture tables so JIT/classloading cost is not charged
@@ -59,17 +57,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
+    val cpus = LocalSession.cpus()
+    val reps = LocalSession.positiveInt("SPARK_GRAFT_BENCH_REPS",
+      sys.env.get("SPARK_GRAFT_BENCH_REPS"), 2)
     val loadavgStart = loadavgNow()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     Seq(Tables.lineitem _, Tables.orders _, Tables.events _,
       Tables.documents _, Tables.embeddings _)
       .foreach(load => load(spark, sfDir).count())

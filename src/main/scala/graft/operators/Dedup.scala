@@ -894,7 +894,7 @@ object Dedup {
     * bucket count degenerates to all-pairs — measured slope 3.0 on the
     * sf1→sf10 decade), while trained cells confine the pairwise scan to
     * within-cell: with nCells ∝ corpus the n²/nCells work stays LINEAR
-    * (measured slope 0.58, tools/NearDupScale).
+    * (measured slope 0.58 over the sf1→sf10 decade in round 12).
     *
     * Every candidate is exact-verified against `threshold` at the cell
     * join, so precision is 1.0 by construction; recall is the spill/cell
@@ -938,8 +938,9 @@ object Dedup {
     * constant cell count is exactly the scale bug the fixed 16-bucket
     * LSH banding had.
     *
-    * Defaults measured on the fixture decade (tools/CellPairTune, cos
-    * 0.45): spill=4 / 2000 vectors-per-cell holds pair recall 1.000 /
+    * Defaults measured on the fixture decade (cos 0.45; `Probe cert
+    * q97_neardup_cells_recall` prints the registered pair counts): spill=4
+    * / 2000 vectors-per-cell holds pair recall 1.000 /
     * 1.000 / 0.993 at 500 / 2 k / 20 k vectors while per-vector work
     * stays a constant ~spill²·vectorsPerCell dot products. spill=2
     * (semanticDedup's default; half the index) measured 0.49–0.79 at

@@ -54,11 +54,17 @@ object Scale {
   /** `localCheckpoint()` unless `df` already IS a materialized leaf (the
     * handle a prior localCheckpoint returned), whose lineage is already
     * cut — re-checkpointing it would only copy the same blocks through
-    * one more eager job. */
+    * one more eager job. Only an RDD that is checkpointed or persisted
+    * counts as materialized: a plain `createDataFrame(rdd)` leaf recomputes
+    * its lineage on every pass, and a nondeterministic one would hand each
+    * pass different rows. */
   def pinOnce(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.storage.StorageLevel
     df.queryExecution.analyzed match {
-      case _: LogicalRDD => df
+      case r: LogicalRDD if r.rdd.isCheckpointed ||
+          r.rdd.getCheckpointFile.isDefined ||
+          r.rdd.getStorageLevel != StorageLevel.NONE => df
       case _ => df.localCheckpoint()
     }
   }

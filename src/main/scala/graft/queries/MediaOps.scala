@@ -327,10 +327,10 @@ object MediaOps {
     * broken side-info walk, scalefactor map, entropy path, requantizer,
     * butterfly, IMDCT or window flips the boolean and the hash. Gate is
     * 25 dB — measured over a stride-sampled lattice of the registered
-    * (ns, freq) parameter grid via graft.tools.CodecTune (ns by 107,
-    * freq by 23 — 70 points, not every pair the query can generate):
-    * min 36.5 dB, median 42 dB (an 11.5 dB margin, matching the
-    * q120/q126 practice). */
+    * (ns, freq) parameter grid (ns by 107, freq by 23 — 135 points, not
+    * every pair the query can generate): min 36.5 dB, median 42 dB (an
+    * 11.5 dB margin, matching the q120/q126 practice). Mp3L3Spec's tone
+    * test re-measures the lattice and holds its minimum at ≥ 35 dB. */
   private val q146 = NamedQuery(
     "q146_mp3_layer3_decode",
     (s, d) => {

@@ -49,18 +49,21 @@ object RecallQueries {
       .select(col("n_probes"), col("min_recall"),
         (col("sum_hit") / col("sum_exact")).as("macro_recall"))
 
+  private final case class Cert(query: NamedQuery,
+      summary: (SparkSession, String) => DataFrame)
+
   /** Build a certificate NamedQuery: `summary` yields ONE row; each check
     * is (name, threshold, pass-expression over the summary columns). The
     * oracle is the constant table the checks must hash-match. A null pass
     * (empty input edge) is surfaced as false, never silently dropped. */
   private def cert(name: String,
       summary: (SparkSession, String) => DataFrame,
-      checks: (String, Double, Column)*): NamedQuery = {
+      checks: (String, Double, Column)*): Cert = {
     val structs = checks.map { case (c, t, p) =>
       struct(lit(c).as("check"), lit(t).as("threshold"),
         coalesce(p, lit(false)).as("pass"))
     }
-    NamedQuery(name,
+    Cert(NamedQuery(name,
       (s, d) => summary(s, d)
         .select(explode(array(structs: _*)).as("c"))
         .select(col("c.check").as("check"),
@@ -68,7 +71,8 @@ object RecallQueries {
       Some(checks.map { case (c, t, _) => s"('$c', $t, true)" }
         .mkString(
           "SELECT \"check\", CAST(threshold AS DOUBLE) AS threshold, pass " +
-            "FROM (VALUES ", ", ", ") AS t(\"check\", threshold, pass)")))
+            "FROM (VALUES ", ", ", ") AS t(\"check\", threshold, pass)"))),
+      summary)
   }
 
   /** q95: IVF ANN (q71's exact result, [[SharedAnn.ivfResult]]) recall@5
@@ -498,10 +502,10 @@ object RecallQueries {
     * the FROZEN (rotation, centroids, codebooks) triple, compacted
     * (which must carry the rotation), then probed with the refine
     * re-rank. The rebuilt arm is q148's shared full-corpus build
-    * (fresh rotation + quantizers). Thresholds measured via
-    * graft.tools.OpqIndexTune: appended macro 0.80 (sf0.01) / 0.80
-    * (sf0.1), drift +0.08 / −0.10 (the disk≡memory diff is exactly 0
-    * at both scales) — gated at 0.50 / ≤ 0.30 with the family's usual
+    * (fresh rotation + quantizers). Measured appended macro 0.80
+    * (sf0.01) / 0.80 (sf0.1), drift +0.08 / −0.10 (the disk≡memory diff
+    * is exactly 0 at both scales; `Probe cert q149_opq_index_append_recall`
+    * prints the values) — gated at 0.50 / ≤ 0.30 with the family's usual
     * margin. */
   private val q149 = cert(
     "q149_opq_index_append_recall",
@@ -561,7 +565,15 @@ object RecallQueries {
     ("holdout_accuracy", 0.99, col("accuracy") >= 0.99),
     ("holdout_margin", 0.0, col("min_good") > col("max_junk")))
 
-  val all: Seq[NamedQuery] =
+  private val certs =
     Seq(q95, q96, q97, q98, q99, q106, q109, q110, q127, q133, q137, q140,
       q142, q145, q149, q184c)
+
+  val all: Seq[NamedQuery] = certs.map(_.query)
+
+  /** Each certificate's one-row summary by query name: the measured
+    * recall, drift and error values its checks threshold, before they
+    * are reduced to pass booleans (`Probe cert <name>` prints it). */
+  val summaries: Map[String, (SparkSession, String) => DataFrame] =
+    certs.map(c => c.query.name -> c.summary).toMap
 }

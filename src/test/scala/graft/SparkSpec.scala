@@ -5,17 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for suites: one local SparkSession per JVM. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** A fixed 4 threads, so results do not depend on the host's cores. */
+  lazy val spark: SparkSession = LocalSession(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

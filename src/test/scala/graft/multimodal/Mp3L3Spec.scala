@@ -38,6 +38,17 @@ class Mp3L3Spec extends AnyFunSuite {
       val snr = snrDb(d.samples(0), s.map(_ / 32768.0))
       assert(snr > 30.0, s"rate $rate: SNR $snr dB")
     }
+    // q146's registered grid (ns = n_chars % 1500 + 600, freq =
+    // doc_id % 200 + 200, 32 kHz), stride-sampled: the query gates each
+    // row at 25 dB, so a lattice minimum of 35 dB keeps a 10 dB margin
+    // (measured minimum 36.5 dB at ns=1028, freq=384)
+    val lattice = for (ns <- 600 to 2099 by 107; freq <- 200 to 399 by 23) yield {
+      val s = tone(ns, freq.toDouble, 32000)
+      val d = Mp3L3.decode(Mp3L3.encode(32000, Array(s))).get
+      assert(d.samples(0).length === (ns + Delay + 1151) / 1152 * 1152)
+      (snrDb(d.samples(0), s.map(_ / 32768.0)), ns, freq)
+    }
+    assert(lattice.min._1 >= 35.0, s"q146 lattice minimum (snr, ns, freq) ${lattice.min}")
   }
 
   test("stereo with distinct channels keeps them separate") {

@@ -2,7 +2,9 @@ package graft.operators
 
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class SaltedAggSpec extends SparkSpec {
   import spark.implicits._
@@ -28,21 +30,15 @@ class SaltedAggSpec extends SparkSpec {
   }
 }
 
-/** fanOut derives input width from the logical plan, never from `.rdd` —
-  * constructing the fanned-out DataFrame must run ZERO Spark jobs even
-  * over a post-aggregation input (under AQE, `Dataset.rdd` materializes
-  * every upstream shuffle stage just to report a partition count, so the
-  * round-15 form executed the whole upstream pipeline twice). */
-class FanOutSpec extends SparkSpec {
-  import spark.implicits._
-
+/** Job counting for plan-time laziness checks. */
+private object JobCount {
   /** Count jobs started by `body`. The listener bus is async, so a marker
     * job runs after the body; the bus is FIFO, so once the marker's start
     * event is observed every event from the body has been delivered. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
+  def during[T](spark: SparkSession)(body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val marker = "fanout-lazy-marker"
+    val marker = "job-count-marker"
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -64,12 +60,21 @@ class FanOutSpec extends SparkSpec {
       (r, jobs.get())
     } finally spark.sparkContext.removeSparkListener(l)
   }
+}
+
+/** fanOut derives input width from the logical plan, never from `.rdd` —
+  * constructing the fanned-out DataFrame must run ZERO Spark jobs even
+  * over a post-aggregation input (under AQE, `Dataset.rdd` materializes
+  * every upstream shuffle stage just to report a partition count, so the
+  * round-15 form executed the whole upstream pipeline twice). */
+class FanOutSpec extends SparkSpec {
+  import spark.implicits._
 
   test("fanOut is plan-time lazy: zero jobs to construct, even " +
       "over a post-aggregation input") {
     val base = (1L to 5000L).map(i => (i, s"t$i")).toDF("doc_id", "text")
     val agg = base.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val (fanned, jobs) = jobsDuring {
+    val (fanned, jobs) = JobCount.during(spark) {
       Scale.fanOut(agg, "doc_id")
     }
     assert(jobs === 0, s"fanOut ran $jobs jobs at plan-construction time")
@@ -94,6 +99,35 @@ class FanOutSpec extends SparkSpec {
     assert(untouched.queryExecution.analyzed eq
       wide.queryExecution.analyzed,
       "already-wide input must be a plan-level no-op")
+  }
+}
+
+/** pinOnce skips the checkpoint only for a leaf that is already
+  * materialized; any other RDD leaf recomputes its lineage per pass. */
+class PinOnceSpec extends SparkSpec {
+  private val schema = StructType(Seq(StructField("img_id", LongType),
+    StructField("y", LongType), StructField("x", LongType),
+    StructField("v", DoubleType)))
+
+  private def noisyRows = spark.sparkContext.parallelize(0 until 64, 4)
+    .map(i => Row(0L, (i / 8).toLong, (i % 8).toLong, scala.util.Random.nextDouble()))
+
+  test("pinOnce pins a nondeterministic createDataFrame(rdd) frame: " +
+      "every pass reads the same pixels") {
+    val pinned = Scale.pinOnce(spark.createDataFrame(noisyRows, schema))
+    def pass() = pinned.orderBy("y", "x").collect().toSeq
+    assert(pass() === pass())
+  }
+
+  test("pinOnce passes a localCheckpoint handle through with no job") {
+    val handle = spark.createDataFrame(noisyRows, schema).localCheckpoint()
+    val (out, jobs) = JobCount.during(spark)(Scale.pinOnce(handle))
+    assert(out eq handle)
+    assert(jobs === 0, s"pinOnce ran $jobs jobs on a localCheckpoint handle")
+    // a lazy handle is persisted but not yet materialized: still a pass-through
+    val lazyHandle = spark.createDataFrame(noisyRows, schema)
+      .localCheckpoint(eager = false)
+    assert(Scale.pinOnce(lazyHandle) eq lazyHandle)
   }
 }
 
